@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import graft.io.PerfTracker
 
 /** Driver-run benchmark: executes every registered query on the sf dir
@@ -28,9 +27,9 @@ import graft.io.PerfTracker
   * warm cannot reach) — and the timed rep reports a build/exec split
   * (`build_sec` in BENCH_PERF.jsonl) so an eager-materialization query
   * can be adjudicated from the files alone. BENCH_PERF.jsonl opens and
-  * closes with a `ctx` run-context line (load average, heap ceiling):
-  * a captured number is only trustworthy next to the machine state
-  * that produced it.
+  * closes with a `ctx` run-context line (load average, heap ceiling,
+  * width): a captured number is only trustworthy next to the machine
+  * state that produced it.
   */
 object Bench {
 
@@ -42,11 +41,15 @@ object Bench {
     * is a genuine measurement of the same plan (when the prior capture
     * was degraded, the retry line often holds the ONLY clean rep);
     * (b) twins apply only when the file's ctx line was captured at the
-    * SAME sf_dir — a dev run at another scale factor would otherwise
-    * make the >3x guard fire on every query (or never). */
+    * SAME sf_dir AND the same width — a dev run at another scale
+    * factor, or a 4-wide run against a 32-wide capture, would otherwise
+    * make the >3x guard fire on every query (or never). The width is
+    * the ctx's `cpus` (the configured `local[N]`); files written before
+    * that field existed fall back to `avail_cpus`, and a ctx carrying
+    * neither is matched on sf_dir alone. */
   private[graft] def parseTwins(lines: Seq[String],
-      sfDir: String): Map[String, Double] =
-    parseTwinStats(lines, sfDir).map { case (k, v) => k -> v._1 }
+      sfDir: String, cpus: Int): Map[String, Double] =
+    parseTwinStats(lines, sfDir, cpus).map { case (k, v) => k -> v._1 }
 
   /** [[parseTwins]] plus the twin's TASK time: (min sec across all of a
     * query's lines, that same line's task_ms). The task_ms rides the
@@ -57,11 +60,14 @@ object Bench {
     * (probe evidence lines) carry no "sec" key either, so they never
     * enter the fold. */
   private[graft] def parseTwinStats(lines: Seq[String],
-      sfDir: String): Map[String, (Double, Long)] = {
-    val sfRe = """"sf_dir":"([^"]+)"""".r
-    val priorSf = lines.find(_.contains(""""ctx":"start""""))
-      .flatMap(l => sfRe.findFirstMatchIn(l).map(_.group(1)))
-    if (!priorSf.contains(sfDir)) Map.empty
+      sfDir: String, cpus: Int): Map[String, (Double, Long)] = {
+    val ctx = lines.find(_.contains(""""ctx":"start""""))
+    def field(re: scala.util.matching.Regex): Option[String] =
+      ctx.flatMap(l => re.findFirstMatchIn(l).map(_.group(1)))
+    val priorSf = field(""""sf_dir":"([^"]+)"""".r)
+    val priorCpus = field(""""cpus":([0-9]+)""".r)
+      .orElse(field(""""avail_cpus":([0-9]+)""".r)).map(_.toInt)
+    if (!priorSf.contains(sfDir) || priorCpus.exists(_ != cpus)) Map.empty
     else {
       val nameRe = """"name":"([^"]+)"""".r
       val secRe = """"sec":([0-9.]+)""".r
@@ -215,7 +221,8 @@ object Bench {
       // (spark.sql.maxMetadataStringLength), so the cut point shifts
       // with expression-id DIGIT WIDTH — i.e. with how many exprIds
       // earlier queries in the JVM consumed (q334's r13 "context-
-      // sensitive fingerprint", root-caused r14 via PlanProbe). The
+      // sensitive fingerprint", root-caused r14 with what is now
+      // `graft.tools.Query plan`). The
       // strip runs to the last ", ReadSchema:" (schema text has no
       // exprIds, so its own truncation is context-free); pushdown
       // changes stay visible — a filter that stops (or starts) being
@@ -266,12 +273,12 @@ object Bench {
     * `name` (the child's final total — it runs exactly one query), or
     * None on any failure (probe evidence is best-effort: a broken
     * probe must never fail the capture). */
-  private def runProbe(name: String, sfDir: String,
-      cpus: String): Option[Double] = {
+  private def runProbe(name: String, sfDir: String): Option[Double] = {
     val tmp = java.nio.file.Files
       .createTempDirectory("graft_probe_").toFile
     try {
-      val (argv, env) = probeCommand(liveClasspath(), name, sfDir, cpus)
+      val (argv, env) = probeCommand(liveClasspath(), name, sfDir,
+        Session.cpus.toString)
       val pb = new ProcessBuilder(argv: _*)
       pb.directory(tmp)
       // both streams go to the OS, not pipes (r12 ADVICE): reading
@@ -341,15 +348,7 @@ object Bench {
     val launchLoad = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     // one optimizer configuration for the whole suite: q70 registers the
     // extensions at query-build time, which would otherwise flip the
     // RewriteHofCosine rule on mid-run and make later plans depend on
@@ -386,8 +385,8 @@ object Bench {
     // plan regressions. The retry is annotated in the perf line
     // ("retry_of") so the evidence channel still shows both values.
     // committed twins via [[parseTwins]] (min per name ACROSS ALL of a
-    // query's lines — retry and median-rep lines INCLUDED, sf_dir-
-    // matched — see the parser's scaladoc)
+    // query's lines — retry and median-rep lines INCLUDED, sf_dir- and
+    // width-matched — see the parser's scaladoc)
     val priorStats: Map[String, (Double, Long)] = {
       val f = new java.io.File("BENCH_PERF.jsonl")
       if (!f.exists()) Map.empty
@@ -395,10 +394,11 @@ object Bench {
         val src = scala.io.Source.fromFile(f)
         try {
           val lines = src.getLines().toVector
-          val twins = parseTwinStats(lines, sfDir)
+          val twins = parseTwinStats(lines, sfDir, Session.cpus)
           if (twins.isEmpty && lines.nonEmpty)
             System.err.println("[bench] prior BENCH_PERF.jsonl has no " +
-              s"usable twins for $sfDir — running without the retry guard")
+              s"usable twins for $sfDir at width ${Session.cpus} — " +
+              "running without the retry guard")
           twins
         } finally src.close()
       }
@@ -444,6 +444,7 @@ object Bench {
       s"""{"ctx":"$tag","load_avg":${f3(
         if (tag == "start") launchLoad else osBean.getSystemLoadAverage)}""" +
         s""","avail_cpus":${osBean.getAvailableProcessors}""" +
+        s""","cpus":${Session.cpus}""" +
         s""","heap_max_mb":${Runtime.getRuntime.maxMemory() / (1024 * 1024)}""" +
         s""","sf_dir":"$sfDir"}"""
     // dev knob: SPARK_GRAFT_BENCH_ONLY=q104,q114 times just those
@@ -629,7 +630,7 @@ object Bench {
         probesSpent += 1
         System.err.println(s"[bench] $name published rep is code-state " +
           "suspect — spawning fresh-JVM probe")
-        runProbe(name, sfDir, cpus) match {
+        runProbe(name, sfDir) match {
           case Some(probeSec) =>
             perfLog.println(s"""{"q":"${short(name)}","name":"$name"""" +
               s""","probe_sec":${f3(probeSec)},"probe":"fresh-jvm"""" +

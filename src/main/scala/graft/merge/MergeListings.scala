@@ -12,9 +12,12 @@ import org.apache.spark.sql.types._
   *
   * The per-row update rules (SURVEY §2 D-rules R1–R9) run inside a single
   * Catalyst `aggregate()` higher-order function, so the whole merge is
-  * declarative, codegen-friendly, and reproduces the reference's
-  * *sequential* semantics exactly — including several source rows for the
-  * same key in one batch (insert-then-update, intra-batch price changes).
+  * declarative and reproduces the reference's *sequential* semantics
+  * exactly — including several source rows for the same key in one batch
+  * (insert-then-update, intra-batch price changes). It is NOT compiled:
+  * `ArrayAggregate` (like the `array_sort` comparator below) is a
+  * `CodegenFallback` expression in Spark 4.1, so the fold is interpreted
+  * per row, with no common-subexpression elimination inside the lambda.
   *
   * Scale shape: one hash shuffle of the (small) batch side + one join
   * against the master table. With the master bucketed/partitioned by
@@ -112,10 +115,10 @@ object MergeListings {
         .unionByName(orphans, allowMissingColumns = true)
     } else seqSource.filter(col(KEY).isNotNull)
 
-    // ---- 3. Per-key ordered row array (the shuffle). Row struct carries
-    // __seq first so sort_array orders by arrival.
+    // ---- 3. Per-key ordered row array (the shuffle), full-outer joined
+    // with the master. Row struct carries __seq first so sort_array
+    // orders by arrival.
     val srcCols = sourceKeyed.columns.filterNot(_ == "__seq").toSeq
-    val withSeq = sourceKeyed
     val rowStruct = struct(col("__seq") +: srcCols.map(c => col(c)): _*)
     // explicit __seq comparator: sort_array's struct ordering rejects rows
     // holding MapType columns (the extras bag)
@@ -123,11 +126,10 @@ object MergeListings {
       when(l.getField("__seq") < r.getField("__seq"), lit(-1))
         .when(l.getField("__seq") > r.getField("__seq"), lit(1))
         .otherwise(lit(0))
-    val grouped = withSeq
+    val grouped = sourceKeyed
       .groupBy(col(KEY).as("__k"))
       .agg(array_sort(collect_list(rowStruct), bySeq).as("__rows"))
 
-    // ---- 3. Full outer join with the master.
     val t = target.alias("t")
     val joined = t.join(grouped, col(s"t.$KEY") === col("__k"), "full_outer")
 
@@ -259,7 +261,7 @@ object MergeListings {
       .otherwise(slice(rows, lit(2), size(rows) - 1))
     val folded = aggregate(coalesce(foldRows, array().cast(ArrayType(
       // never used when __rows is null, but aggregate needs a typed array
-      withSeq.select(rowStruct).schema.head.dataType))),
+      sourceKeyed.select(rowStruct).schema.head.dataType))),
       init, (s, r) => updateState(s, r))
 
     joined

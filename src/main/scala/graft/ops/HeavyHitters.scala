@@ -70,7 +70,7 @@ object HeavyHitters {
     override def finish(b: Map[String, Long]): Map[String, Long] = b
     // kryo is an opaque blob to Tungsten, but at ≤ 10⁴ entries the
     // buffer never matters: measured against an ExpressionEncoder map
-    // buffer on the q83 workload (100k keys, k=15, local[32]) — 0.17 s
+    // buffer on the q83 workload (100k keys, k=15, 32 cores) — 0.17 s
     // vs 0.18 s per pass, within run noise. Kept for the simpler
     // round-trip of the Scala Map through reduce/merge.
     override def bufferEncoder: Encoder[Map[String, Long]] =

@@ -72,7 +72,7 @@ class BenchContractSpec extends AnyFunSuite {
       """{"q":"q2","name":"q2_scan","sec":1.000,"rep":2}""",
       """{"q":"q2","name":"q2_scan","sec":3.000,"rep":3}""",
       s"""{"ctx":"end","load_avg":0.6,"sf_dir":"$sf"}""")
-    val twins = Bench.parseTwins(lines, sf)
+    val twins = Bench.parseTwins(lines, sf, 32)
     assert(twins == Map("q1_agg" -> 4.2, "q2_scan" -> 1.0,
       "q3_join" -> 1.5))
   }
@@ -82,13 +82,28 @@ class BenchContractSpec extends AnyFunSuite {
       """{"ctx":"start","load_avg":0.5,"sf_dir":"/root/testdata/sf0.01"}""",
       """{"q":"q1","name":"q1_agg","sec":0.400}""")
     // a dev run at another scale factor must not arm the 3x guard
-    assert(Bench.parseTwins(lines, "/root/testdata/sf0.1").isEmpty)
-    assert(Bench.parseTwins(lines, "/root/testdata/sf0.01")
+    assert(Bench.parseTwins(lines, "/root/testdata/sf0.1", 32).isEmpty)
+    assert(Bench.parseTwins(lines, "/root/testdata/sf0.01", 32)
       == Map("q1_agg" -> 0.4))
     // a file with no ctx line at all (pre-r5 format) yields no twins
     assert(Bench.parseTwins(
       Seq("""{"q":"q1","name":"q1_agg","sec":0.400}"""),
-      "/root/testdata/sf0.1").isEmpty)
+      "/root/testdata/sf0.1", 32).isEmpty)
+  }
+
+  test("twins only apply when the prior capture's width matches") {
+    val sf = "/root/testdata/sf0.1"
+    val q = """{"q":"q1","name":"q1_agg","sec":0.400}"""
+    // a 32-wide capture must not arm the 3x guard against a 4-wide run
+    val wide = Seq(s"""{"ctx":"start","load_avg":0.5,"avail_cpus":4,""" +
+      s""""cpus":32,"sf_dir":"$sf"}""", q)
+    assert(Bench.parseTwins(wide, sf, 4).isEmpty)
+    assert(Bench.parseTwins(wide, sf, 32) == Map("q1_agg" -> 0.4))
+    // files written before the cpus field: avail_cpus is the width
+    val legacy = Seq(s"""{"ctx":"start","load_avg":0.5,"avail_cpus":32,""" +
+      s""""heap_max_mb":16384,"sf_dir":"$sf"}""", q)
+    assert(Bench.parseTwins(legacy, sf, 32) == Map("q1_agg" -> 0.4))
+    assert(Bench.parseTwins(legacy, sf, 4).isEmpty)
   }
 
   test("code-state suspect flag: fires on the C2-deopt signature only " +
@@ -126,11 +141,11 @@ class BenchContractSpec extends AnyFunSuite {
       // a line with no task_ms at all parses as 0 (pre-r13 files)
       """{"q":"q8","name":"q8_y","sec":2.000}""",
       s"""{"ctx":"end","load_avg":0.6,"sf_dir":"$sf"}""")
-    val stats = Bench.parseTwinStats(lines, sf)
+    val stats = Bench.parseTwinStats(lines, sf, 32)
     assert(stats("q9_x") == ((1.5, 2500L)))
     assert(stats("q8_y") == ((2.0, 0L)))
     // parseTwins stays the seconds view of the same fold
-    assert(Bench.parseTwins(lines, sf) ==
+    assert(Bench.parseTwins(lines, sf, 32) ==
       Map("q9_x" -> 1.5, "q8_y" -> 2.0))
   }
 
@@ -190,7 +205,7 @@ class BenchContractSpec extends AnyFunSuite {
       """"shuf_w":1,"spill":0,"tasks":4,"heap_mb":100""" + stamp +
       ""","store_mb":0,"store_rdds":0}"""
     val twins = Bench.parseTwinStats(Seq(
-      s"""{"ctx":"start","load_avg":0.5,"sf_dir":"$sf"}""", line), sf)
+      s"""{"ctx":"start","load_avg":0.5,"sf_dir":"$sf"}""", line), sf, 32)
     assert(twins == Map("q1_agg" -> ((1.5, 2500L))))
   }
 

@@ -50,7 +50,7 @@ import sys
 
 # Queries whose executed plan is KNOWN-MULTISTABLE across execution
 # contexts for reasons the structural fingerprint cannot canonicalize,
-# each with a graft.tools.PlanProbe reproduction on record. A CHANGED
+# each with a `graft.tools.Query plan` reproduction on record. A CHANGED
 # verdict for these prints `multi*` instead — the known benign flip —
 # and regression flags treat them as same-plan. Entries require a
 # reproduction, not a hunch:
@@ -58,10 +58,10 @@ import sys
 #    two exact countDistinct groups by expression-set iteration order,
 #    which depends on how many expression ids earlier queries in the
 #    JVM consumed — the two plans are the same tree with gid 1 and 2
-#    (and the matching grouping-key order) swapped. Reproduced r14:
-#    PlanProbe "q69_sketch_stats" vs "q21_dedup_exact,q69_sketch_stats"
-#    flips both fingerprints; the normalized texts differ ONLY in the
-#    gid interlock.
+#    (and the matching grouping-key order) swapped. Reproduced r14 with
+#    the PlanProbe main that `Query plan` replaced: "q69_sketch_stats"
+#    vs "q21_dedup_exact,q69_sketch_stats" flips both fingerprints; the
+#    normalized texts differ ONLY in the gid interlock.
 KNOWN_MULTISTABLE = {"q69_sketch_stats"}
 
 
