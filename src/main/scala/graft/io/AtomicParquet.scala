@@ -1,23 +1,26 @@
 package graft.io
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** S7 atomic publish: write-tmp-then-swap directory rename — readers see
   * the old or the new table, never a half-written one (the reference's
   * whole-file-rewrite "transaction", parse_data.py:222). On a cluster a
   * transactional table format replaces this; the call site is the seam.
+  *
+  * It is also the one Hadoop-FS seam for published artifacts: every
+  * swap, existence probe and data-file count goes through it, so a
+  * non-local filesystem (or a later batch-id guard stored inside the
+  * swap) has one place to change.
   */
 object AtomicParquet {
 
   def read(spark: SparkSession, path: String,
       schemaSource: => DataFrame): DataFrame = {
-    // restart entry: heal a crashed half-swap FIRST — otherwise a missing
-    // main dir reads as an empty master and the next publish deletes
-    // __old, the only surviving copy
-    recover(spark, path)
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(path))) spark.read.parquet(path)
+    // restart entry: `exists` heals a crashed half-swap FIRST — otherwise
+    // a missing main dir reads as an empty master and the next publish
+    // deletes __old, the only surviving copy
+    if (exists(spark, path)) spark.read.parquet(path)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       schemaSource.schema)
@@ -40,7 +43,7 @@ object AtomicParquet {
     * same path sound. */
   def publishDir(spark: SparkSession, path: String)(
       write: String => Unit): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, path)
     val main = new Path(path)
     val tmp = new Path(path + "__tmp")
     val old = new Path(path + "__old")
@@ -66,8 +69,20 @@ object AtomicParquet {
     * empty makes the next publish delete `__old`, the only copy). */
   def exists(spark: SparkSession, path: String): Boolean = {
     recover(spark, path)
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(new Path(path))
+    fileSystem(spark, path).exists(new Path(path))
+  }
+
+  /** Number of data files directly under `dir` — every file whose name
+    * does not start with `_` (Spark's `_SUCCESS`, a `_manifest.json`) or
+    * `.` (checksum files); 0 when `dir` does not exist. */
+  def dataFiles(spark: SparkSession, dir: String): Int = {
+    val fs = fileSystem(spark, dir)
+    val d = new Path(dir)
+    if (!fs.exists(d)) 0
+    else fs.listStatus(d).count { st =>
+      val name = st.getPath.getName
+      st.isFile && !name.startsWith("_") && !name.startsWith(".")
+    }
   }
 
   /** Crash recovery: if a previous publish died between its two renames
@@ -75,10 +90,13 @@ object AtomicParquet {
     * [[read]] invokes this on every restart; a no-op in the healthy
     * state. */
   def recover(spark: SparkSession, path: String): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, path)
     val main = new Path(path)
     val old = new Path(path + "__old")
     if (!fs.exists(main) && fs.exists(old) && !fs.rename(old, main))
       throw new java.io.IOException(s"atomic publish: recovery rename failed for $path")
   }
+
+  private def fileSystem(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 }

@@ -23,7 +23,9 @@ import org.apache.spark.sql.functions._
   * `writeManifest` stamps a publish with `_manifest.json`: row count
   * + an ORDER-FREE content fingerprint (sum of per-row md5-60 hashes
   * of the full row — commutative, so any engine, any partitioning,
-  * any file layout reproduces it) + the file count. The manifest is
+  * any file layout reproduces it) + the file count. Both file counts
+  * (`compact`'s before/after and the manifest's) are
+  * [[AtomicParquet.dataFiles]]. The manifest is
   * what downstream consumers check before trusting a handoff, and
   * q183's oracle independently recomputes both numbers from the
   * written files.
@@ -50,18 +52,13 @@ object Compaction {
       targetRowsPerFile: Long): (Long, Int, Int) = {
     require(targetRowsPerFile >= 1,
       s"targetRowsPerFile must be >= 1, got $targetRowsPerFile")
-    def parquetFiles(p: String): Int = {
-      val d = new java.io.File(p)
-      val fs = d.listFiles()
-      if (fs == null) 0 else fs.count(_.getName.endsWith(".parquet"))
-    }
-    val before = parquetFiles(dir)
+    val before = AtomicParquet.dataFiles(spark, dir)
     val df = spark.read.parquet(dir)
     val rows = df.count()
     val nFiles = math.max(1L, (rows + targetRowsPerFile - 1)
       / targetRowsPerFile).toInt
     AtomicParquet.publish(df.repartition(nFiles), dir)
-    (rows, before, parquetFiles(dir))
+    (rows, before, AtomicParquet.dataFiles(spark, dir))
   }
 
   /** Stamp `dir` with `_manifest.json` (row_count, content_sum,
@@ -70,10 +67,7 @@ object Compaction {
     val df = spark.read.parquet(dir)
     val rows = df.count()
     val fp = contentFingerprint(df)
-    val files = {
-      val fs = new java.io.File(dir).listFiles()
-      if (fs == null) 0 else fs.count(_.getName.endsWith(".parquet"))
-    }
+    val files = AtomicParquet.dataFiles(spark, dir)
     val json = s"""{"row_count":$rows,"content_sum":$fp,""" +
       s""""n_files":$files}"""
     java.nio.file.Files.write(

@@ -13,17 +13,16 @@ import org.apache.spark.sql.types.{DoubleType, FloatType, StructType}
   */
 object JsonTable {
 
-  def read(spark: SparkSession, path: String, schema: StructType): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(path)))
-      spark.read.schema(schema).json(path)
+  /** Heals a crashed half-swap before probing (see [[AtomicParquet
+    * .exists]]), so a table left at `path__old` reads back intact. */
+  def read(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    if (AtomicParquet.exists(spark, path)) spark.read.schema(schema).json(path)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
 
-  /** NaN-scrubbed overwrite (A9); atomic via the same tmp-swap as the
-    * parquet master. */
+  /** NaN-scrubbed overwrite (A9); atomic through
+    * [[AtomicParquet.publishDir]], the same tmp-swap as the parquet
+    * master. */
   def write(df: DataFrame, path: String): Unit = {
     val scrubbed = df.schema.fields.foldLeft(df) { (acc, f) =>
       f.dataType match {
@@ -33,16 +32,7 @@ object JsonTable {
         case _ => acc
       }
     }
-    val spark = df.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(path + "__tmp")
-    val main = new org.apache.hadoop.fs.Path(path)
-    val old = new org.apache.hadoop.fs.Path(path + "__old")
-    scrubbed.write.mode("overwrite").json(tmp.toString)
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(main)) fs.rename(main, old)
-    fs.rename(tmp, main)
-    fs.delete(old, true)
+    AtomicParquet.publishDir(df.sparkSession, path)(tmp =>
+      scrubbed.write.json(tmp))
   }
 }

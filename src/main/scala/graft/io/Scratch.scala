@@ -41,32 +41,17 @@ object Scratch {
       catch { case e: Throwable => deleteTree(new java.io.File(d)); throw e }
     })
 
-  /** Copy every regular file from a staged dir into `dst` (created if
-    * missing) — the cheap per-invocation "tick delivery" that replaces
-    * re-running the staging Spark jobs when a query needs files to
-    * APPEAR in a watched directory between AvailableNow runs. Skips
-    * Spark's _SUCCESS markers and hidden files. */
-  def deliver(srcDir: String, dst: String): Unit = {
-    val d = java.nio.file.Paths.get(dst)
-    java.nio.file.Files.createDirectories(d)
-    val s = java.nio.file.Paths.get(srcDir)
-    val it = java.nio.file.Files.list(s).iterator()
-    while (it.hasNext) {
-      val f = it.next()
-      val name = f.getFileName.toString
-      if (java.nio.file.Files.isRegularFile(f) && !name.startsWith("_") &&
-          !name.startsWith("."))
-        java.nio.file.Files.copy(f, d.resolve(name),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
-
-  /** [[deliver]], recursively — for staged artifacts that are
-    * DIRECTORY TREES (a written [[graft.ops.Dedup.PrefixIndex]]:
-    * vocab/grams/prefixes/meta parquet dirs). Used when a query
-    * MUTATES its per-invocation copy (q338 folds stream batches into
-    * the index), so invocations must never share the staged
-    * original. Same skip rules as [[deliver]] per level. */
+  /** Copy a staged directory tree into `dst` (created if missing),
+    * skipping Spark's `_SUCCESS` markers and hidden files at every
+    * level. Two uses: the cheap per-invocation "tick delivery" that
+    * replaces re-running the staging Spark jobs when a query needs
+    * files to APPEAR in a watched directory between AvailableNow runs
+    * (a flat parquet output: every data file is copied), and staged
+    * artifacts that are DIRECTORY TREES (a written
+    * [[graft.ops.Dedup.PrefixIndex]]: vocab/grams/prefixes/meta
+    * parquet dirs) when a query MUTATES its per-invocation copy (q338
+    * folds stream batches into the index), so invocations never share
+    * the staged original. */
   def deliverTree(srcDir: String, dst: String): Unit = {
     val d = java.nio.file.Paths.get(dst)
     java.nio.file.Files.createDirectories(d)

@@ -1994,13 +1994,7 @@ object Dedup {
       s"cannot append a span-gram state built at anchor length " +
         s"${batch.l} onto a state built at $prevL — their hashes " +
         "never match")
-    val dataFiles = {
-      val d = new java.io.File(s"$dir/state")
-      Option(d.listFiles()).getOrElse(Array.empty)
-        .count(f => f.isFile && !f.getName.startsWith("_") &&
-          !f.getName.startsWith("."))
-    }
-    if (dataFiles > compactAt) {
+    if (graft.io.AtomicParquet.dataFiles(spark, s"$dir/state") > compactAt) {
       // compacting rewrite: the aggregated bar (old deltas + this
       // batch) replaces the delta pile — readSpanGramState's sum is
       // the identity again until the next appends accumulate

@@ -1,16 +1,20 @@
 package graft.queries
 
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import graft.model.Tables
-import graft.streaming.{StreamingMerge, StreamOps}
+import graft.streaming.{AvailableNow, StreamingMerge, StreamOps}
 
 /** Driver-visible exercise of the Structured Streaming layer (SURVEY §2
   * S1–S7): these queries run REAL streaming plans — `readStream` file
-  * source → `Trigger.AvailableNow` → `foreachBatch` MERGE + atomic
-  * publish / watermarked window aggregation — and surface the result as
-  * a batch DataFrame the DuckDB oracle can restate.
+  * source → `foreachBatch` MERGE + atomic publish / watermarked window
+  * aggregation — and surface the result as a batch DataFrame the DuckDB
+  * oracle can restate. Every run goes through the one micro-batch seam,
+  * [[graft.streaming.AvailableNow]] (`foreachBatch` for parquet/state
+  * sinks, `toMemory` for memory sinks), which owns the checkpoint and
+  * the `AvailableNow` trigger; no query wires them itself.
   *
   * The reference's hourly cron run IS one micro-batch (scrape_and_
   * process.sh:1-24 + parse_data.py:213-233): each q41 streaming run
@@ -35,7 +39,8 @@ object StreamingQueries extends QueryModule {
     * memoizes the staged dir per JVM; invocations after the first
     * reuse it read-only (checkpoints/sinks/masters stay fresh — only
     * the immutable input files are shared). Multi-tick queries stage
-    * each tick's file in a subdir and DELIVER it (a local file copy)
+    * each tick's file in a subdir and DELIVER it
+    * ([[graft.io.Scratch.deliverTree]], a local file copy)
     * into the per-invocation watched dir, preserving the
     * files-appear-between-runs shape the shared checkpoint tests. */
   private def staged(tag: String, d: String)(write: String => Unit): String =
@@ -118,7 +123,7 @@ object StreamingQueries extends QueryModule {
         val ckpt = s"$root/ckpt"
 
         def tick(tickDir: String): Unit = {
-          graft.io.Scratch.deliver(tickDir, inDir)
+          graft.io.Scratch.deliverTree(tickDir, inDir)
           val stream = s.readStream.schema(schema).parquet(inDir)
           StreamingMerge.start(stream, masterPath, ckpt, Some("event_id"))
             .awaitTermination()
@@ -201,19 +206,9 @@ object StreamingQueries extends QueryModule {
         // already exists (createTempDirectory), and Spark's
         // ErrorIfExists save mode refuses an existing path
         val inDir = staged("q42", d)(r => ev.write.parquet(s"$r/in")) + "/in"
-        val sinkTable = "graft_stream_rollup_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = StreamOps
-          .hourlyRollup(s.readStream.schema(ev.schema).parquet(inDir))
-          .writeStream
-          .outputMode("update")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .format("memory")
-          .queryName(sinkTable)
-          .start()
-        q.awaitTermination()
-        s.table(sinkTable).select(
+        AvailableNow.toMemory(
+          StreamOps.hourlyRollup(s.readStream.schema(ev.schema).parquet(inDir)),
+          s"$root/ckpt", OutputMode.Update()).select(
           date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
           col("event_type"), col("n"),
           col("total_value").cast("double").as("total_value"))
@@ -249,19 +244,9 @@ object StreamingQueries extends QueryModule {
             lit(-1L).as("user_id"), lit(0.0).as("value"))
           ev.unionByName(sentinel).coalesce(1).write.parquet(s"$dir/in")
         } + "/in"
-        val sinkTable = "graft_stream_sessions_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = StreamOps
-          .sessionize(s.readStream.schema(ev.schema).parquet(inDir))
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .format("memory")
-          .queryName(sinkTable)
-          .start()
-        q.awaitTermination()
-        s.table(sinkTable).filter(col("user_id") =!= -1L)
+        AvailableNow.toMemory(
+          StreamOps.sessionize(s.readStream.schema(ev.schema).parquet(inDir)),
+          s"$root/ckpt", OutputMode.Append()).filter(col("user_id") =!= -1L)
           .select(col("user_id"),
             date_format(col("session_start"), "yyyy-MM-dd HH:mm:ss")
               .as("session_start"),
@@ -306,22 +291,12 @@ object StreamingQueries extends QueryModule {
           ev.write.mode("append").parquet(s"$r/in")
           ev.write.mode("append").parquet(s"$r/in") // duplicate delivery
         } + "/in"
-        val sink = "graft_stream_dedup_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = StreamOps
-          .dedupEvents(s.readStream.schema(ev.schema).parquet(inDir))
-          .select(col("event_id"), col("user_id"),
-            date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("tss"),
-            col("value"))
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .format("memory")
-          .queryName(sink)
-          .start()
-        q.awaitTermination()
-        s.table(sink)
+        AvailableNow.toMemory(
+          StreamOps.dedupEvents(s.readStream.schema(ev.schema).parquet(inDir))
+            .select(col("event_id"), col("user_id"),
+              date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("tss"),
+              col("value")),
+          s"$root/ckpt", OutputMode.Append())
       },
       Some("""SELECT event_id, user_id,
              |  strftime(ts, '%Y-%m-%d %H:%M:%S') AS tss, value
@@ -351,22 +326,12 @@ object StreamingQueries extends QueryModule {
             col("event_id").as("seq"))
         val inDir = staged("q58", d)(r =>
           ev.coalesce(1).write.parquet(s"$r/in")) + "/in"
-        val sink = "graft_stream_timeout_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = StreamOps.lifecycleEventTime(
-            s.readStream.schema(ev.schema).parquet(inDir),
-            quietMillis = quiet, watermarkDelay = "1 hour")
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .format("memory")
-          .queryName(sink)
-          .start()
-        q.awaitTermination()
-        s.table(sink).select(
-          col("key").cast("long").as("user_id"), col("kind"),
-          col("price"), col("delta"), col("ts").as("ts_ms"))
+        val cdc = StreamOps.lifecycleEventTime(
+          s.readStream.schema(ev.schema).parquet(inDir),
+          quietMillis = quiet, watermarkDelay = "1 hour")
+        AvailableNow.toMemory(cdc.toDF(), s"$root/ckpt", OutputMode.Append())
+          .select(col("key").cast("long").as("user_id"), col("kind"),
+            col("price"), col("delta"), col("ts").as("ts_ms"))
       },
       Some("""WITH src AS (
              |  SELECT user_id, event_id, value, CAST(ts AS TIMESTAMP) AS ts
@@ -419,21 +384,11 @@ object StreamingQueries extends QueryModule {
         val inDir = staged("q93", d)(r =>
           left.unionByName(right).coalesce(1).write.parquet(s"$r/in")
         ) + "/in"
-        val sinkTable = "graft_stream_asof_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = StreamOps
-          .asOfJoinStream(s.readStream.schema(
-            left.schema).parquet(inDir))
-          .toDF()
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .format("memory")
-          .queryName(sinkTable)
-          .start()
-        q.awaitTermination()
-        s.table(sinkTable).select(col("event_id"), col("user_id"),
+        AvailableNow.toMemory(
+          StreamOps.asOfJoinStream(
+            s.readStream.schema(left.schema).parquet(inDir)).toDF(),
+          s"$root/ckpt", OutputMode.Append()
+        ).select(col("event_id"), col("user_id"),
           date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts"),
           col("value"),
           date_format(col("asof_ts"), "yyyy-MM-dd HH:mm:ss").as("asof_ts"),
@@ -526,7 +481,7 @@ object StreamingQueries extends QueryModule {
         }
 
         def tick(tickDir: String): Unit = {
-          graft.io.Scratch.deliver(tickDir, inDir)
+          graft.io.Scratch.deliverTree(tickDir, inDir)
           StreamOps.sampleExactStream(
             s.readStream.schema(docs.schema).parquet(inDir),
             "doc_id", n = 100L, seed = "st1", samplePath, ckpt)
@@ -582,7 +537,7 @@ object StreamingQueries extends QueryModule {
               java.nio.file.Paths.get(fixtureDir, name),
               java.nio.file.Paths.get(inDir, name))
           }
-          val q = s.readStream.format("binaryFile")
+          val files = s.readStream.format("binaryFile")
             .schema(org.apache.spark.sql.types.StructType(Seq(
               org.apache.spark.sql.types.StructField("path",
                 org.apache.spark.sql.types.StringType),
@@ -593,15 +548,11 @@ object StreamingQueries extends QueryModule {
               org.apache.spark.sql.types.StructField("content",
                 org.apache.spark.sql.types.BinaryType))))
             .load(s"$inDir/*.warc")
-            .writeStream
-            .foreachBatch { (batch: DataFrame, _: Long) =>
+          AvailableNow.foreachBatch(files, ckpt, OutputMode.Append()) {
+            (batch, _) =>
               graft.sources.WarcReader.records(batch)
                 .write.mode("append").parquet(outDir)
-            }
-            .option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+          }.awaitTermination()
         }
         tick(Seq(0, 1))
         tick(Seq(2, 3))
@@ -650,19 +601,12 @@ object StreamingQueries extends QueryModule {
         // run 1's watermark), so each run's update emissions land in
         // their own parquet dir via foreachBatch — the q41 pattern
         def tick(tickDir: String, outDir: String): Unit = {
-          graft.io.Scratch.deliver(tickDir, inDir)
-          val q = StreamOps
-            .hourlyRollup(s.readStream.schema(schema).parquet(inDir),
-              watermark = "1 hour")
-            .writeStream
-            .outputMode("update")
-            .foreachBatch { (b: DataFrame, _: Long) =>
-              b.write.mode("append").parquet(outDir)
-            }
-            .option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+          graft.io.Scratch.deliverTree(tickDir, inDir)
+          val rolled = StreamOps.hourlyRollup(
+            s.readStream.schema(schema).parquet(inDir), watermark = "1 hour")
+          AvailableNow.foreachBatch(rolled, ckpt, OutputMode.Update()) {
+            (b, _) => b.write.mode("append").parquet(outDir)
+          }.awaitTermination()
         }
         tick(s"$src/t0", s"$root/out1")
         tick(s"$src/t1", s"$root/out2")
@@ -749,18 +693,9 @@ object StreamingQueries extends QueryModule {
           keyExpr = "user_id = p_user_id",
           leftTsCol = "ts", rightTsCol = "p_ts",
           lowerSec = 300L, upperSec = 300L)
-        val sinkTable = "graft_stream_ij_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = joined.select(col("event_id"), col("purchase_id"))
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .format("memory")
-          .queryName(sinkTable)
-          .start()
-        q.awaitTermination()
-        s.table(sinkTable)
+        AvailableNow.toMemory(
+          joined.select(col("event_id"), col("purchase_id")),
+          s"$root/ckpt", OutputMode.Append())
       },
       Some("""SELECT p.event_id, i.event_id AS purchase_id
              |FROM events p
@@ -807,18 +742,10 @@ object StreamingQueries extends QueryModule {
             keyExpr = "user_id = p_user_id",
             leftTsCol = "ts", rightTsCol = "p_ts",
             lowerSec = 300L, upperSec = 300L)
-          val sinkTable = "graft_stream_oij_" +
-            java.util.UUID.randomUUID().toString.replace("-", "")
-          val q = joined.select(col("event_id"), col("purchase_id"))
-            .writeStream
-            .outputMode("append")
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .format("memory")
-            .queryName(sinkTable)
-            .start()
-          q.awaitTermination()
-          s.table(sinkTable).filter(col("event_id") >= 0)
+          AvailableNow.toMemory(
+            joined.select(col("event_id"), col("purchase_id")),
+            s"$root/ckpt", OutputMode.Append()
+          ).filter(col("event_id") >= 0)
       },
       Some("""SELECT c.event_id, p.event_id AS purchase_id
              |FROM events c
@@ -853,24 +780,18 @@ object StreamingQueries extends QueryModule {
             .coalesce(1).write.parquet(s"$dir/t0")
         }
         val schema = s.read.parquet(s"$src/t0").schema
-        graft.io.Scratch.deliver(s"$src/t0", inDir)
+        graft.io.Scratch.deliverTree(s"$src/t0", inDir)
         val dim = broadcast(Tables.customer(s, d)
           .select(col("c_custkey"), col("c_mktsegment")))
-        val q = s.readStream.schema(schema).parquet(inDir)
+        val agg = s.readStream.schema(schema).parquet(inDir)
           .withColumn("cents",
             expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"))
           .join(dim, col("user_id") === col("c_custkey"))
           .groupBy(col("c_mktsegment"), col("event_type"))
           .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
-          .writeStream
-          .outputMode("update")
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            b.write.mode("append").parquet(s"$root/out")
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        AvailableNow.foreachBatch(agg, ckpt, OutputMode.Update()) {
+          (b, _) => b.write.mode("append").parquet(s"$root/out")
+        }.awaitTermination()
         s.read.parquet(s"$root/out")
       },
       Some("""SELECT c_mktsegment, event_type, count(*) AS n,
@@ -900,21 +821,12 @@ object StreamingQueries extends QueryModule {
         val schema = Tables.events(s, d)
           .select(col("ts"), col("user_id"), col("event_id")).schema
         def tick(tickDir: String, outDir: String): Unit = {
-          graft.io.Scratch.deliver(tickDir, inDir)
-          val q = StreamOps
-            .quotaGate(s.readStream.schema(schema).parquet(inDir),
-              perDay = 2)
-            .writeStream
-            .outputMode("append")
-            .foreachBatch {
-              (b: org.apache.spark.sql.Dataset[StreamOps.QuotaOut],
-                  _: Long) =>
-                b.write.mode("append").parquet(outDir)
-            }
-            .option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+          graft.io.Scratch.deliverTree(tickDir, inDir)
+          val gated = StreamOps.quotaGate(
+            s.readStream.schema(schema).parquet(inDir), perDay = 2)
+          AvailableNow.foreachBatch(gated, ckpt, OutputMode.Append()) {
+            (b, _) => b.write.mode("append").parquet(outDir)
+          }.awaitTermination()
         }
         tick(s"$src/t0", s"$root/out1")
         tick(s"$src/t1", s"$root/out2")
@@ -985,10 +897,10 @@ object StreamingQueries extends QueryModule {
         val stateDir = s"$root/state"
         val outDir = s"$root/out"
         def tick(tickDir: String): Unit = {
-          graft.io.Scratch.deliver(tickDir, inDir)
-          val q = s.readStream.schema(schema).parquet(inDir)
-            .writeStream
-            .foreachBatch { (batch: DataFrame, _: Long) =>
+          graft.io.Scratch.deliverTree(tickDir, inDir)
+          val docs = s.readStream.schema(schema).parquet(inDir)
+          AvailableNow.foreachBatch(docs, ckpt, OutputMode.Append()) {
+            (batch, _) =>
               val D = graft.ops.Dedup
               val batchState =
                 D.spanGramState(batch, "doc_id", "text", l = 12)
@@ -1007,11 +919,7 @@ object StreamingQueries extends QueryModule {
               D.duplicateCoverageAgainst(batch,
                   D.readSpanGramState(s, stateDir), "doc_id", "text")
                 .write.mode("append").parquet(outDir)
-            }
-            .option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+          }.awaitTermination()
         }
         tick(s"$src/t0")
         tick(s"$src/t1")
@@ -1079,10 +987,10 @@ object StreamingQueries extends QueryModule {
         val outDir = s"$root/out"
         val schema = s.read.parquet(s"$src/t0").schema
         def tick(tickDir: String): Unit = {
-          graft.io.Scratch.deliver(tickDir, inDir)
-          val q = s.readStream.schema(schema).parquet(inDir)
-            .writeStream
-            .foreachBatch { (batch: DataFrame, _: Long) =>
+          graft.io.Scratch.deliverTree(tickDir, inDir)
+          val docs = s.readStream.schema(schema).parquet(inDir)
+          AvailableNow.foreachBatch(docs, ckpt, OutputMode.Append()) {
+            (batch, _) =>
               // dedup against the pre-merge index (the batch never
               // pairs with itself here) and fold the batch in, as ONE
               // shared-frame, append-structured step (r14: the
@@ -1094,11 +1002,7 @@ object StreamingQueries extends QueryModule {
               graft.ops.Dedup
                 .dedupAndMergePrefixIndexDir(s, idxDir, batch, "text")
                 .write.mode("append").parquet(outDir)
-            }
-            .option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+          }.awaitTermination()
         }
         tick(s"$src/t0")
         tick(s"$src/t1")

@@ -1,10 +1,9 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
-  OutputMode, StreamingQuery, Trigger}
+  OutputMode, StreamingQuery}
 
 /** Streaming restatement of the reference's incremental semantics
   * (SURVEY §2 H): the hourly cron batch IS a micro-batch stream —
@@ -22,20 +21,16 @@ object StreamingMerge {
     * unchanged.
     */
   def start(batches: DataFrame, masterPath: String,
-      checkpointDir: String, seqCol: Option[String] = None): StreamingQuery = {
-    batches.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        mergeIntoMaster(spark, batch, masterPath, seqCol)
-      }
-      .start()
-  }
+      checkpointDir: String, seqCol: Option[String] = None): StreamingQuery =
+    AvailableNow.foreachBatch(batches, checkpointDir, OutputMode.Update()) {
+      (batch, _) =>
+        mergeIntoMaster(batch.sparkSession, batch, masterPath, seqCol)
+    }
 
-  /** One micro-batch merge + atomic publish (callable from batch mode
-    * too — the cron-driven E2 entry uses exactly this).
+  /** One micro-batch merge + atomic publish, callable from batch mode
+    * too. The cron-driven E2 entry (`graft.Main`) does not call it: it
+    * runs `Pipeline.processBatch` and then [[graft.io.AtomicParquet
+    * .publish]] itself.
     *
     * @param seqCol optional source column giving the deterministic fold
     *        order for multiple same-key rows inside one micro-batch (the
@@ -433,15 +428,11 @@ object StreamOps {
   def nearDupAgainstCorpusStream(stream: DataFrame,
       index: graft.ops.Dedup.CorpusIndex, textCol: String, tau: Double,
       outPath: String, checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    AvailableNow.foreachBatch(stream, checkpointDir, OutputMode.Append()) {
+      (batch, _) =>
         graft.ops.Dedup.crossCorpusAgainstIndex(batch, index, textCol, tau)
           .write.mode("append").parquet(outPath)
-      }
-      .start()
+    }
 
   /** STREAMING exact-size uniform sample —
     * [[graft.ops.Sampling.sampleExact]] maintained incrementally over
@@ -465,22 +456,18 @@ object StreamOps {
       seed: String, samplePath: String,
       checkpointDir: String): StreamingQuery = {
     require(n >= 1 && n <= Int.MaxValue, s"n must be in [1, 2^31), got $n")
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
+    AvailableNow.foreachBatch(stream, checkpointDir, OutputMode.Append()) {
+      (batch, _) =>
         val hashed = batch.withColumn("__r",
           graft.ops.Dedup.md5Hash60(concat(
             col(keyCol).cast("string"), lit(seed))))
-        val prev = graft.io.AtomicParquet.read(spark, samplePath, hashed)
+        val prev = graft.io.AtomicParquet.read(
+          batch.sparkSession, samplePath, hashed)
         graft.io.AtomicParquet.publish(
           prev.unionByName(hashed)
             .dropDuplicates(keyCol)
             .orderBy(col("__r").asc, col(keyCol).asc).limit(n.toInt),
           samplePath)
-      }
-      .start()
+    }
   }
 }

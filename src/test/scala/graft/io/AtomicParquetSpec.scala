@@ -38,4 +38,18 @@ class AtomicParquetSpec extends SparkSpec {
     AtomicParquet.recover(spark, dir)
     assert(spark.read.parquet(dir).count() == 1)
   }
+
+  test("JsonTable.read heals a crash between the two renames of a write") {
+    val dir = Files.createTempDirectory("graft_json_rec").toString + "/master"
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "offer_id STRING, price_value DOUBLE")
+    JsonTable.write(Seq(("1", 5.0), ("2", 7.0)).toDF("offer_id",
+      "price_value"), dir)
+    // crash after main moved to __old, before __tmp arrived
+    assert(fs(dir).rename(new Path(dir), new Path(dir + "__old")))
+    val back = JsonTable.read(spark, dir, schema)
+      .as[(String, Double)].collect().toSet
+    assert(back == Set(("1", 5.0), ("2", 7.0)))
+    assert(fs(dir).exists(new Path(dir)))
+  }
 }
