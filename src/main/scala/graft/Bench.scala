@@ -349,11 +349,6 @@ object Bench {
       .getOperatingSystemMXBean.getSystemLoadAverage
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session()
-    // one optimizer configuration for the whole suite: q70 registers the
-    // extensions at query-build time, which would otherwise flip the
-    // RewriteHofCosine rule on mid-run and make later plans depend on
-    // suite order (register is idempotent, so q70's own call is a no-op)
-    graft.plans.GraftExtensions.register(spark)
     val tracker = PerfTracker.install(spark)
     // warm the JVM/codegen once on the smallest sf so per-query numbers
     // measure execution, not first-query classloading

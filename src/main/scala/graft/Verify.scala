@@ -11,9 +11,6 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val spark = Session()
-    // uniform optimizer config across the suite (q70 would otherwise
-    // install the extension rules mid-run; register is idempotent)
-    graft.plans.GraftExtensions.register(spark)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -20,11 +20,11 @@ object JsonTable {
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
-  /** NaN-scrubbed overwrite (A9); atomic through
-    * [[AtomicParquet.publishDir]], the same tmp-swap as the parquet
-    * master. */
-  def write(df: DataFrame, path: String): Unit = {
-    val scrubbed = df.schema.fields.foldLeft(df) { (acc, f) =>
+  /** A9 NaN scrub (parse_data.py:187-204): NaN → null on every Double
+    * or Float column; the JSON master and the CSV views both write
+    * through it. */
+  def scrubNaN(df: DataFrame): DataFrame =
+    df.schema.fields.foldLeft(df) { (acc, f) =>
       f.dataType match {
         case DoubleType | FloatType =>
           acc.withColumn(f.name,
@@ -32,7 +32,11 @@ object JsonTable {
         case _ => acc
       }
     }
+
+  /** NaN-scrubbed overwrite (A9); atomic through
+    * [[AtomicParquet.publishDir]], the same tmp-swap as the parquet
+    * master. */
+  def write(df: DataFrame, path: String): Unit =
     AtomicParquet.publishDir(df.sparkSession, path)(tmp =>
-      scrubbed.write.json(tmp))
-  }
+      scrubNaN(df).write.json(tmp))
 }

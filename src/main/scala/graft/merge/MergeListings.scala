@@ -20,9 +20,11 @@ import org.apache.spark.sql.types._
   * per row, with no common-subexpression elimination inside the lambda.
   *
   * Scale shape: one hash shuffle of the (small) batch side + one join
-  * against the master table. With the master bucketed/partitioned by
-  * `offer_id` the join is co-located; with a small batch Catalyst picks a
-  * broadcast join and the master is never shuffled at all.
+  * against the master table. The master is one unpartitioned parquet
+  * directory that [[graft.io.AtomicParquet.publish]] rewrites each run,
+  * so the join shuffles it on `offer_id` unless the batch is small
+  * enough for Catalyst to pick a broadcast join, which leaves the master
+  * unshuffled.
   *
   * Divergences from the reference (documented, deliberate):
   *   - J2 url-fallback "first match wins" depended on Python dict order;
@@ -72,12 +74,6 @@ object MergeListings {
         .distinct.filterNot(c => seqCol.contains(c)).toSeq
     def outType(c: String): DataType =
       tCols.getOrElse(c, sCols.getOrElse(c, managedTypes(c)))
-
-    def aligned(df: DataFrame, cols: Map[String, DataType],
-        keep: Seq[String]): DataFrame =
-      df.select(keep.map { c =>
-        if (cols.contains(c)) col(c) else lit(null).cast(outType(c)).as(c)
-      }: _*)
 
     // ---- 1. Arrival order: the reference folds source rows list-order;
     // seqCol carries that order (default: monotonic id = partition order).

@@ -17,7 +17,8 @@ object Tables {
   /** Timestamp-column normalizer, adaptive to the generator's parquet
     * physical type. Earlier testdata drops wrote TIMESTAMP(NANOS)
     * (pyarrow default), which Spark's vectorized reader rejects — those
-    * read as long (`nanosAsLong`) and are rebuilt with integer division
+    * read as long (`nanosAsLong`, which [[graft.Session]] sets) and are
+    * rebuilt with integer division
     * (`div`, not `/` — ns-since-epoch ≈ 1.7e18 exceeds double's 2^53
     * exact-integer range, so float division would corrupt timestamps).
     * Current drops write TIMESTAMP(MICROS, isAdjustedToUTC=false), which
@@ -36,7 +37,6 @@ object Tables {
       s"events loader requires spark.sql.session.timeZone=UTC (got '$tz'): " +
         "the TIMESTAMP_NTZ -> TIMESTAMP cast reinterprets naive micros in " +
         "the session zone, so any other zone silently shifts timestamps")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = load(spark, dir, name)
     tsCols.foldLeft(raw) { (df, c) =>
       df.schema(c).dataType match {

@@ -122,11 +122,6 @@ object Dedup {
       .distinct()
   }
 
-  def lshCandidatePairs(df: DataFrame, idCol: String, gramsCol: String,
-      numHashes: Int = 128, bandRows: Int = 2): DataFrame =
-    candidatesFromSig(signatureTable(df, idCol, gramsCol, numHashes),
-      idCol, numHashes, bandRows)
-
   /** Signature-agreement estimate filter: matching positions / numHashes
     * is an unbiased Jaccard estimator, so a loose cut at 0.6·tau kills
     * essentially every false candidate (background J≈0.02 estimating

@@ -12,9 +12,9 @@ import graft.parse.ListingParser
   * the same shape a mapPartitions HTTP client would produce).
   *
   * Stage boundaries are lazy — Catalyst fuses parse→flatten→normalize
-  * into one job; only the merge shuffles (on offer_id). The master
-  * table at scale is Parquet partitioned by a stable hash of offer_id,
-  * making the per-batch merge join co-partitioned.
+  * into one job; only the merge shuffles (on offer_id). The master is
+  * one unpartitioned parquet directory, rewritten whole by
+  * [[graft.io.AtomicParquet.publish]] after each merge.
   */
 case class RawPage(url: String, html: String)
 
@@ -141,16 +141,14 @@ object Pipeline {
         >= asOf - expr("INTERVAL 7 DAYS")
         || col("status") === "active")
 
-  /** A9/A10 CSV sink with NaN scrub (parse_data.py:187-204): NaN → null
-    * on floating columns; array/map/struct columns JSON-encoded (the
-    * reference's pandas to_csv stringifies them); header CSV. */
+  /** A9/A10 CSV sink with NaN scrub ([[graft.io.JsonTable.scrubNaN]]);
+    * array/map/struct columns JSON-encoded (the reference's pandas
+    * to_csv stringifies them); header CSV. */
   def writeCsv(df: DataFrame, path: String): Unit = {
     import org.apache.spark.sql.types._
-    val scrubbed = df.schema.fields.foldLeft(df) { (acc, f) =>
+    val nanFree = graft.io.JsonTable.scrubNaN(df)
+    val scrubbed = nanFree.schema.fields.foldLeft(nanFree) { (acc, f) =>
       f.dataType match {
-        case DoubleType | FloatType =>
-          acc.withColumn(f.name, when(isnan(col(f.name)), lit(null))
-            .otherwise(col(f.name)))
         case _: ArrayType | _: MapType | _: StructType =>
           acc.withColumn(f.name, to_json(col(f.name)))
         case _ => acc

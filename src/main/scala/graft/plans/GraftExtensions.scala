@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -18,25 +18,15 @@ import graft.functions.{CosineSimilarity, EditDistanceExpr, LcsLengthExpr, Norma
   * HOF cosine inside join conditions (60–90 s / 2M pairs, see
   * CosineSimilarity's scaladoc) disappears without a code change.
   *
-  * Production sessions hook at build time:
-  * {{{
-  *   SparkSession.builder().withExtensions(new GraftExtensions).…
-  *   // or: spark.sql.extensions=graft.plans.GraftExtensions
-  * }}}
-  * For sessions built elsewhere (the correctness driver's, notebooks),
-  * [[GraftExtensions.register]] installs the same pieces at runtime.
-  * `register` additionally excludes `InferFiltersFromGenerate` (see the
-  * note at [[GraftExtensions.register]]); builder-time users should set
-  * `spark.sql.optimizer.excludedRules` to the same value — extensions
-  * cannot modify confs.
+  * [[graft.Session]] installs all of it, through [[register]], on the
+  * session it builds, so every main and the test suite plan with the
+  * same optimizer. `register` also excludes `InferFiltersFromGenerate`
+  * (see the note at [[register]]). A session built elsewhere (a
+  * notebook's) gets the same pieces by calling `register` itself.
+  * `register` runs after the session exists rather than through
+  * builder-time `injectOptimizerRule`, which would place the rewrite in
+  * a different optimizer batch.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftExtensions.functionDescriptions.foreach(ext.injectFunction)
-    ext.injectOptimizerRule(_ => RewriteHofCosine)
-  }
-}
-
 object GraftExtensions {
 
   /** Always-cast to array<double>: builders see unresolved children
@@ -52,9 +42,9 @@ object GraftExtensions {
       s"$what must be an integer literal, got $other")
   }
 
-  /** (identifier, info, builder) triples for `injectFunction` /
+  /** (identifier, info, builder) triples for
     * `FunctionRegistry.registerFunction`. */
-  val functionDescriptions: Seq[(FunctionIdentifier, ExpressionInfo,
+  private val functionDescriptions: Seq[(FunctionIdentifier, ExpressionInfo,
       Seq[Expression] => Expression)] = Seq(
     (FunctionIdentifier("graft_cosine"),
       info("graft_cosine", classOf[CosineSimilarity]),
@@ -123,10 +113,9 @@ object GraftExtensions {
   private val ExcludedOptimizerRules =
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
 
-  /** Idempotent runtime installation on an existing session (the
-    * correctness driver builds its own session, so oracle queries call
-    * this at query time; `registerFunction` overwrites on re-register
-    * and the rule is appended once). */
+  /** Idempotent installation on an existing session
+    * (`registerFunction` overwrites on re-register, the rule is appended
+    * once and the exclusion is added once). */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     functionDescriptions.foreach { case (id, fi, builder) =>

@@ -1445,12 +1445,11 @@ object CorpusQueries extends QueryModule {
     // ---- the Catalyst extension surface, driver-visible: graft_cosine
     // is the SQL-registered native kernel; cos_hof is written in the
     // portable HOF Column form and rewritten to the SAME kernel by the
-    // injected RewriteHofCosine rule (plan shape asserted in
+    // RewriteHofCosine rule graft.Session installs (plan shape asserted in
     // CurationOpsSpec) — both restated by DuckDB's list arithmetic.
     Q(
       "q70_sql_native_cosine",
       (s, d) => {
-        graft.plans.GraftExtensions.register(s)
         val e = Tables.embeddings(s, d)
           .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
         val joined = e.alias("a").join(e.alias("b"),

@@ -49,7 +49,6 @@ object Query {
         sys.error(s"no registered query named $n"))).toSeq
     val sfDir = args.lift(2).getOrElse("/root/testdata/sf0.01")
     val spark = Session()
-    graft.plans.GraftExtensions.register(spark)
 
     val stages = ArrayBuffer[Stage]()
     var jobs = 0

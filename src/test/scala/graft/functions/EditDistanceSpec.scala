@@ -32,7 +32,6 @@ class EditDistanceSpec extends SparkSpec {
 
   test("SQL registration: graft_edit_distance and graft_lcs_length " +
       "evaluate through the function registry") {
-    graft.plans.GraftExtensions.register(spark)
     assert(spark.sql("SELECT graft_edit_distance('kitten', 'sitting')")
       .as[Int].head() == 3)
     assert(spark.sql("SELECT graft_edit_distance('aaaa', 'bbbb', 2)")

@@ -549,12 +549,21 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("native cosine yields null on length mismatch, like the HOF form") {
-    val d = Seq((Seq(1.0, 2.0), Seq(1.0, 2.0, 3.0)),
-      (Seq(1.0, 0.0), Seq(1.0, 0.0))).toDF("a", "b")
-    val native = d.select(graft.functions.CosineSimilarity($"a", $"b"))
+    val rows = Seq((Seq(1.0, 2.0), Seq(1.0, 2.0, 3.0)),
+      (Seq(1.0, 0.0), Seq(1.0, 0.0)))
+    val native = rows.toDF("a", "b")
+      .select(graft.functions.CosineSimilarity($"a", $"b"))
       .as[Option[Double]].collect().toSeq
-    val hof = d.select(Similarity.cosine($"a", $"b"))
-      .as[Option[Double]].collect().toSeq
+    // the HOF side plans in a fresh session, which has no
+    // RewriteHofCosine: the reference stays the HOF form instead of
+    // being rewritten into the kernel it is compared with
+    val hofDf = spark.newSession().createDataFrame(rows).toDF("a", "b")
+      .select(Similarity.cosine($"a", $"b"))
+    val optimized = hofDf.queryExecution.optimizedPlan
+    assert(optimized.expressions.forall(_.collect {
+      case c: graft.functions.CosineSimilarity => c }.isEmpty),
+      s"HOF reference was rewritten to the native kernel:\n$optimized")
+    val hof = hofDf.as[Option[Double]].collect().toSeq
     assert(native == Seq(None, Some(1.0)))
     assert(native == hof)
   }

@@ -789,7 +789,6 @@ class CurationOpsSpec extends SparkSpec {
   // ---------------------------------------------------- extensions
 
   test("graft_cosine & sketch functions callable from SQL") {
-    graft.plans.GraftExtensions.register(spark)
     val row = spark.sql(
       """SELECT graft_cosine(array(1.0D, 0.0D), array(1.0D, 1.0D)) AS c,
         |  graft_winnowing('abcdefgh', 3, 2) AS fps,
@@ -808,7 +807,6 @@ class CurationOpsSpec extends SparkSpec {
   }
 
   test("RewriteHofCosine swaps the HOF form for the native kernel") {
-    graft.plans.GraftExtensions.register(spark)
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
     val withHof = e.select($"vec_id",
@@ -830,7 +828,6 @@ class CurationOpsSpec extends SparkSpec {
   }
 
   test("RewriteHofCosine leaves mismatched norm children alone") {
-    graft.plans.GraftExtensions.register(spark)
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
     // norms over v, v but dot over v, reverse(v) in the raw form —

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSpec
-import graft.io.BucketedMaster
 import org.apache.spark.sql.functions._
 
 class ScaleOpsSpec extends SparkSpec {
@@ -95,11 +94,13 @@ class ScaleOpsSpec extends SparkSpec {
     val master = Seq(("1", "2026-01-01 10:00:00", 100.0),
       ("2", "2026-01-01 10:00:00", 200.0))
       .toDF("offer_id", "updated_date", "price_value")
-    BucketedMaster.write(master, "graft_master_test", buckets = 4)
+    master.write.mode("overwrite").bucketBy(4, "offer_id")
+      .sortBy("offer_id").format("parquet").saveAsTable("graft_master_test")
 
     val batch = Seq(("1", "2026-01-02 10:00:00", 90.0))
       .toDF("offer_id", "updated_date", "price_value")
-    val merged = BucketedMaster.merge(spark, "graft_master_test", batch)
+    val merged = graft.merge.MergeListings.mergeBatch(
+      spark.table("graft_master_test"), batch)
     // correctness first
     val r = merged.filter($"offer_id" === "1").collect().head
     assert(r.getAs[Double]("price_value") == 90.0)

@@ -67,7 +67,6 @@ class UrlHeavySpec extends SparkSpec {
     assert(out(3L) == ((Some("\ufb01le"), Some("file"))))
     assert(out(4L) == ((None, None)))
     intercept[IllegalArgumentException] { NormalizeUnicode($"t", "NFX") }
-    graft.plans.GraftExtensions.register(spark)
     val viaSql = spark.sql(
       "SELECT graft_normalize('e' || '\u0301', 'NFC')").as[String].collect()
     assert(viaSql.toSeq == Seq("\u00e9"))
